@@ -1,29 +1,42 @@
-"""Distributed connected components — duplicate-cluster assignment.
+"""Graph primitives over DataFrame edge lists.
 
-The last stage of corpus dedup: near-dup PAIRS (from MinHash/SimHash/
-gram-share joins) must become CLUSTERS so one canonical doc per cluster
-survives. Components = min reachable doc_id.
+Clustering and components (``connected_components``,
+``label_propagation``, ``k_core``, ``spectral_bisection``), ranking
+(``pagerank``, ``personalized_pagerank``), traversal
+(``multi_source_bfs``, ``sssp_bounded``, ``deterministic_walks``),
+spanning forests (``boruvka_msf``) and the wedge orientations that
+triangle-style queries start from (``degree_oriented_edges``,
+``oriented_edges_adaptive``). Every result is deterministic so a
+DuckDB oracle can replay it.
 
-Two execution paths, gated on the EDGE count (one cheap count on the
-checkpointed edge list — the LSH/frequency guards upstream mean edges
-are orders of magnitude smaller than the corpus):
+The iterative loops share three rules, implemented once by the private
+helpers below:
 
-- **small graphs** (≤ ``driver_threshold`` edges, default 2M ≈ tens of
-  MB): classic union-find on the driver. Exact, one collect, zero
-  iterative jobs. This is NOT a scale cheat — it is the standard
-  hybrid (GraphFrames, GBBS, and every production dedup pipeline
-  special-case graphs that fit one machine, because a 20-round
-  distributed loop on 1k edges is pure scheduler overhead).
-- **large graphs**: min-label propagation with POINTER JUMPING: each
-  round a node takes the min of (its label, its neighbors' labels,
-  its label's label). The label-of-label jump halves pointer-path
-  lengths, so convergence is O(log diameter) shuffle rounds instead
-  of O(diameter) — at 10⁹ nodes with chain-shaped boilerplate
-  clusters that is ~30 rounds, not ~1000. Each round is two hash
-  joins + one aggregate on uniformly-hashed node ids;
-  ``localCheckpoint`` truncates lineage so plans don't grow with the
-  iteration count; convergence is one tiny agg per round (sum of
-  labels is monotone non-increasing; fixpoint ⇔ unchanged sum).
+- **Pin.** A loop reads its edge-sized relation every round, so it is
+  hash-partitioned ONCE by the key the rounds join or group on and
+  pinned with an eager ``localCheckpoint`` (``_pin``; ``_undirected``
+  for the distinct symmetric arcs). LogicalRDD keeps that partitioning,
+  so a round shuffles only node-sized state, never the edges. Per-round
+  state is checkpointed too: a per-round driver action on a lazy chain
+  would re-execute the whole history each pass.
+- **Gate.** At most ``_STATE_BCAST_MAX`` state rows, the state ships
+  BROADCAST (``_bcast``): joins against the pinned edges are narrow,
+  and edges pinned by the per-round GROUP key make the aggregate
+  exchange-free. Above the gate (10^8-10^9-node graphs) the state must
+  not reach the driver; it shuffles to the edges, which are then
+  pinned by the JOIN key instead. The constant is read at call time,
+  so tests can force either regime.
+- **Release.** A staging copy superseded by a re-pin is released
+  before the loop starts (``unpersist`` for a ``persist``, ``_release``
+  for a checkpoint), so at most one edge-sized relation stays resident
+  through the loop, and no operator leaves anything in the cache
+  manager.
+
+Small graphs skip the loops where an exact driver algorithm exists:
+union-find for components and a Kruskal finish for spanning forests,
+under a heap-scaled edge gate (``driver_gate_threshold``). That is the
+standard hybrid (GraphFrames, GBBS): a 20-round distributed loop on 1k
+edges is pure scheduler overhead.
 """
 
 from __future__ import annotations
@@ -32,12 +45,43 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Node gate for shipping iterative-loop state BROADCAST instead of
-# shuffling it (the pagerank/hits bound: ~4M (long, long) rows ≈ 64 MB
-# framed, well under executor memory; above it the state must not hit
-# the driver). Shared by every loop that takes the r14 two-regime
-# layout; module-level so A/B harnesses can toggle one knob.
+# State rows shipped broadcast: ~4M (long, long) rows ≈ 64 MB framed,
+# well under executor memory.
 _STATE_BCAST_MAX = 4_000_000
+
+
+def _pin(df: DataFrame, key: str) -> DataFrame:
+    """``df`` hash-partitioned by ``key`` and materialized."""
+    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n_shuffle, key).localCheckpoint(eager=True)
+
+
+def _release(pinned: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks now instead of whenever the
+    JVM collects its RDD. The blocks are the only copy: nothing may read
+    ``pinned`` afterwards."""
+    pinned._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _repin(pinned: DataFrame, key: str) -> DataFrame:
+    """``_pin`` by ``key``, releasing the copy it supersedes."""
+    out = _pin(pinned, key)
+    _release(pinned)
+    return out
+
+
+def _undirected(edges: DataFrame, a: str, b: str) -> DataFrame:
+    """Distinct symmetric arcs (s, d) of the undirected edges (a, b),
+    pinned by ``s``."""
+    e = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
+    return _pin(
+        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct(),
+        "s",
+    )
+
+
+def _bcast(df: DataFrame, on: bool) -> DataFrame:
+    return F.broadcast(df) if on else df
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -129,10 +173,11 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     driver_threshold: int | None = None,
-    broadcast_labels_max: int | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``edges``; component is the
-    minimum node id reachable. Edges are treated as undirected.
+    minimum node id reachable. Edges are treated as undirected. This is
+    the last stage of corpus dedup: near-dup PAIRS become CLUSTERS so
+    one canonical doc per cluster survives.
 
     ``driver_threshold`` (the edge count below which the exact driver
     union-find runs instead of the iterative distributed path) defaults
@@ -140,40 +185,30 @@ def connected_components(
     through to the distributed path instead of collecting edges it
     cannot hold.
 
-    Distributed-loop layout (r14, VERDICT r13 item 8 — the
-    pagerank/hits two-regime discipline): the symmetric edge relation
-    is partitioned ONCE by the key each regime re-uses every round.
-    Below the ``broadcast_labels_max`` node gate the label state ships
-    BROADCAST into both per-round joins, joins are narrow, and the
-    edge relation — pre-partitioned by ``s``, the groupBy key — feeds
-    the neighbor-min aggregate with map-side partial aggregation; the
-    only per-round exchange is the node-sized union groupBy. Above the
-    gate (10^9-node graphs: state must not hit the driver) the hint is
-    withheld and the edge relation is re-pinned by ``d``, the join
-    key, so each round shuffles only the node-sized label state, never
-    the edges."""
+    The distributed path is min-label propagation with POINTER JUMPING:
+    each round a node takes the min of (its label, its neighbors'
+    labels, its label's label). The jump halves pointer-path lengths,
+    so convergence takes O(log diameter) rounds instead of
+    O(diameter) — at 10⁹ nodes with chain-shaped boilerplate clusters
+    that is ~30 rounds, not ~1000. Convergence is one tiny aggregate
+    per round: the label sum is monotone non-increasing, so the
+    fixpoint is an unchanged sum. Below the gate the arcs stay pinned
+    by ``s``, the neighbor-min groupBy key, and the only per-round
+    exchange is the node-sized union groupBy."""
     if driver_threshold is None:
         driver_threshold = driver_gate_threshold(
             edges.sparkSession.conf.get("spark.driver.memory", "1g")
         )
     # Materialize the (possibly expensive) upstream edge plan ONCE —
-    # the self-union below would otherwise execute it twice, and the
-    # iterative path re-reads it every round.
+    # the count and the self-union would otherwise execute it twice.
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
         eager=True
     )
     if e.count() <= driver_threshold:
         return _driver_union_find(e)
 
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    both = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition(n_shuffle, "s")
-        .localCheckpoint(eager=True)
-    )
+    both = _undirected(e, "s", "d")
+    _release(e)
     # Exchange-free on the s-partitioned checkpoint.
     labels = (
         both.select(F.col("s").alias("node"))
@@ -181,23 +216,15 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    if broadcast_labels_max is None:
-        broadcast_labels_max = _STATE_BCAST_MAX
-    bcast = labels.count() <= broadcast_labels_max
+    bcast = labels.count() <= _STATE_BCAST_MAX
     if not bcast:
-        # Shuffle regime: one more setup shuffle re-pins the edges by
-        # the per-round JOIN key (the s-layout copy is dropped; only
-        # node-sized state shuffles from here on).
-        both = both.repartition(n_shuffle, "d").localCheckpoint(eager=True)
-
-    def _hint(state: DataFrame) -> DataFrame:
-        return F.broadcast(state) if bcast else state
+        both = _repin(both, "d")
 
     prev_sum = None
     for _ in range(max_iter):
         # neighbor min: node <- min(component over neighbors)
         nbr = both.join(
-            _hint(labels.withColumnRenamed("node", "d2")),
+            _bcast(labels.withColumnRenamed("node", "d2"), bcast),
             F.col("d") == F.col("d2"),
         ).select(F.col("s").alias("node"), "component")
         # pointer jump: node <- component(component(node))
@@ -205,7 +232,7 @@ def connected_components(
             F.col("node").alias("c_node"), F.col("component").alias("c_comp")
         )
         jump = labels.join(
-            _hint(l2), F.col("component") == F.col("c_node")
+            _bcast(l2, bcast), F.col("component") == F.col("c_node")
         ).select("node", F.col("c_comp").alias("component"))
         labels = (
             labels.union(nbr)
@@ -294,6 +321,55 @@ def oriented_edges_adaptive(
     return degree_oriented_edges(edges, a, b), m, dmax
 
 
+def _weighted_edges(
+    edges: DataFrame, src: str, dst: str, pre_deduped: bool, symmetric: bool
+) -> tuple:
+    """The shared pagerank/PPR setup: ``(e_w, nodes, dang_nodes, n_dang,
+    n, bcast)``. ``e_w`` is the distinct (s, d, out_deg) edge list,
+    pinned by ``d`` below the gate (the per-iteration contribution
+    groupBy key, so each aggregate runs exchange-free; isolated A/B at
+    sf0.1 for PPR: 7.4 -> 5.9 s) and checkpointed in the window's own
+    hash(s) layout above it, where the rank state shuffles to the
+    edges. ``nodes`` is the node relation, ``dang_nodes`` the nodes
+    without out-edges (None and 0 for ``symmetric`` graphs: the
+    per-iteration dangling aggregate is skipped outright), and
+    ``bcast`` the gate decision on the node count ``n``."""
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    if not pre_deduped:
+        e = e.distinct()
+    # Fold the out-degree into the edge list with a keyed window instead
+    # of a separate aggregate + join: ONE shuffle of the edge relation
+    # (the agg+join shape shuffled the edge list twice and checkpointed
+    # it twice — measured ~40% of the 10x-scale cost).
+    staged = e.withColumn(
+        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("s"))
+    ).persist()
+    # deg reads off the window's preserved hash(s) partitioning — no
+    # exchange.
+    deg = staged.groupBy("s").agg(F.first("out_deg").alias("out_deg"))
+    if symmetric:
+        # every node appears as a source, so the degree aggregate's key
+        # set IS the node relation — no union+distinct over endpoints
+        nodes = deg.select(F.col("s").alias("node")).localCheckpoint(eager=True)
+        dang_nodes, n_dang = None, 0
+    else:
+        nodes = (
+            staged.select(F.col("s").alias("node"))
+            .union(staged.select(F.col("d").alias("node")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        dang_nodes = nodes.join(
+            deg, nodes["node"] == deg["s"], "left_anti"
+        ).localCheckpoint(eager=True)
+        n_dang = dang_nodes.count()
+    n = nodes.count()
+    bcast = n <= _STATE_BCAST_MAX
+    e_w = _pin(staged, "d") if bcast else staged.localCheckpoint(eager=True)
+    staged.unpersist()
+    return e_w, nodes, dang_nodes, n_dang, n, bcast
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -303,7 +379,6 @@ def pagerank(
     tol: float = 1e-6,
     pre_deduped: bool = False,
     symmetric: bool = False,
-    broadcast_ranks_max: int = 4_000_000,
 ) -> DataFrame:
     """(node, rank) by power iteration over a DIRECTED edge list;
     dangling nodes (no out-edges) redistribute uniformly, so ranks sum
@@ -316,104 +391,34 @@ def pagerank(
     per-iteration ``nodes ⋈ contribs`` densification join is deleted
     and the edge join takes ``coalesce(rank, base)`` instead — bit-for-
     bit the same numbers (``base + damping·0.0 == base`` in IEEE), one
-    less shuffle and a smaller checkpoint per pass. The degree table is
-    pre-joined into the edge list once (not per iteration), and whether
-    any dangling node exists is decided once up front — symmetric
-    graphs skip every per-iteration dangling aggregate.
-    Checkpoint discipline: a per-iteration action (the dangling-mass
-    aggregate or the L1-delta check) re-executes the whole lazy history
-    each pass unless the rank state is materialized, so those paths
-    ``localCheckpoint`` every iteration. But with ``tol=0`` on a graph
-    with no dangling nodes there are NO driver actions inside the loop —
-    every ``sparse_k`` is consumed exactly once by iteration k+1, the
-    DAG is a linear chain, and ONE final job runs all iterations
-    back-to-back (chained shuffles, AQE-coalesced) with nothing
-    recomputed. That path skips the per-iteration eager checkpoints
-    (each one is a full Spark job) and only checkpoints every 8th
-    iteration to bound logical-plan depth for large budgets — measured
-    ~2x faster at a 10-iteration budget.
+    less shuffle and a smaller checkpoint per pass. Below the gate the
+    broadcast rank join measured ~2x on the bench graph (1.2M edges /
+    21k nodes).
 
-    Join strategy: the rank state is node-sized while the weighted edge
-    list is edge-sized — usually orders of magnitude bigger. When the
-    node count is at most ``broadcast_ranks_max`` (default 4M ≈ 64 MB of
-    (long, double) rows — well under executor memory), the per-iteration
-    join BROADCASTS the rank state so the edge relation never reshuffles:
-    each pass is a map-side hash join over the checkpointed edges plus
-    one map-side-combined aggregate whose shuffle is node-sized. Measured
-    ~2x on the bench graph (1.2M edges / 21k nodes). Past the threshold
-    (10^8-10^9-node graphs) it falls back to the shuffle join — rank
-    state that big must not hit the driver.
+    With ``tol=0`` on a graph with no dangling nodes there are NO
+    driver actions inside the loop — every ``sparse_k`` is consumed
+    exactly once by iteration k+1, the DAG is a linear chain, and ONE
+    final job runs all iterations back-to-back (chained shuffles,
+    AQE-coalesced) with nothing recomputed. That path skips the
+    per-iteration eager checkpoints (each one is a full Spark job) and
+    only checkpoints every 8th iteration to bound logical-plan depth
+    for large budgets — measured ~2x faster at a 10-iteration budget.
 
     Caller contracts (both default off):
     * ``pre_deduped=True`` — the edge list is already distinct; skips an
       edge-sized dedup shuffle.
     * ``symmetric=True`` — every node has at least one out-edge (e.g. the
       edge list contains both directions of an undirected graph); the
-      node relation is then exactly the distinct sources (read off the
-      degree aggregate — no separate union+distinct over both endpoint
-      columns) and the dangling machinery is skipped entirely.
+      node relation is then exactly the distinct sources and the
+      dangling machinery is skipped entirely.
 
     Float note: ranks are shuffle-order-dependent in the last ulps —
     callers compare with tolerance or on rounded integers with measured
     half-boundary margins (see graph_pagerank_part_supplier).
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if not pre_deduped:
-        e = e.distinct()
-    # Fold the out-degree into the edge list with a keyed window instead
-    # of a separate aggregate + join: ONE shuffle of the edge relation
-    # and ONE materialization produce the weighted edges the loop reuses
-    # every pass (the old agg+join shape shuffled the edge list twice
-    # and checkpointed it twice — measured ~40% of the 10x-scale cost).
-    # partitionBy("s") is a keyed window — never a single-partition sort.
-    # persist (not localCheckpoint) so the hash(s)-layout copy can be
-    # RELEASED once the d-layout pin replaces it below the broadcast
-    # gate (the PPR r14 shape — see personalized_pagerank).
-    e_w = e.withColumn(
-        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("s"))
-    ).persist()
-    # deg reads off e_w's preserved hash(s) partitioning — no exchange.
-    deg = e_w.groupBy("s").agg(F.first("out_deg").alias("out_deg"))
-    if symmetric:
-        # every node appears as a source, so the degree aggregate's key
-        # set IS the node relation — no union+distinct over endpoints
-        nodes = deg.select(F.col("s").alias("node")).localCheckpoint(eager=True)
-    else:
-        nodes = (
-            e_w.select(F.col("s").alias("node"))
-            .union(e_w.select(F.col("d").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    n = nodes.count()
-    bcast_ranks = n <= broadcast_ranks_max
-    # Dangling-node handling costs one driver-visible aggregate per
-    # iteration — but whether ANY dangling node exists is a property of
-    # the graph, decided once. Graphs built symmetrically (both edge
-    # directions) have none, and skip all per-iteration dangling jobs.
-    if symmetric:
-        dang_nodes, n_dang = None, 0
-    else:
-        dang_nodes = (
-            nodes.join(deg, nodes["node"] == deg["s"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_dang = dang_nodes.count()
-    if bcast_ranks:
-        # Below the gate the rank state ships broadcast, so the edge
-        # relation never shuffles for the join — relay it out pinned by
-        # the contribution GROUP key (d, aliased to node below): every
-        # per-iteration groupBy then runs exchange-free (the PPR r13
-        # layout, extended to pagerank in r14; PPR measured 7.4 -> 5.9 s
-        # for the same move). deg/nodes/dang_nodes are materialized by
-        # now, so the s-layout copy is released — one edge-sized
-        # relation stays resident through the loop.
-        n_shuffle = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        e_w2 = e_w.repartition(n_shuffle, "d").localCheckpoint(eager=True)
-        e_w.unpersist()
-        e_w = e_w2
+    e_w, nodes, dang_nodes, n_dang, n, bcast = _weighted_edges(
+        edges, src, dst, pre_deduped, symmetric
+    )
 
     def densify(sparse, base):
         """Materialize full (node, rank): absent nodes have rank==base
@@ -425,8 +430,6 @@ def pagerank(
         )
 
     # Sparse rank state: (rows for inflow nodes only, scalar base).
-    # Per-iteration driver actions force per-iteration materialization;
-    # without them the loop builds one lazy linear chain (see docstring).
     per_iter_actions = bool(n_dang) or tol > 0
     sparse, base = None, 1.0 / n
     prev_dense = None
@@ -454,7 +457,7 @@ def pagerank(
         if sparse is None:
             joined = e_w
         else:
-            rk = F.broadcast(sparse) if bcast_ranks else sparse
+            rk = _bcast(sparse, bcast)
             joined = e_w.join(rk, e_w["s"] == rk["node"], "left")
         contribs = (
             joined.select(
@@ -500,7 +503,6 @@ def personalized_pagerank(
     max_iter: int = 10,
     pre_deduped: bool = False,
     symmetric: bool = False,
-    broadcast_ranks_max: int = 4_000_000,
 ) -> DataFrame:
     """(node, rank) personalized PageRank: the teleport distribution is
     the single ``restart_node`` instead of uniform — the random-walk
@@ -533,59 +535,11 @@ def personalized_pagerank(
     have held (seed_term + d·0.0 ≡ seed_term bit-for-bit, since
     x + 0.0 == x for the nonnegative ranks). Zero extra operators per
     iteration; the densify applies the same fallback."""
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if not pre_deduped:
-        e = e.distinct()
-    # persist (not localCheckpoint) so the hash(s)-layout copy can be
-    # RELEASED once the d-layout pin replaces it below the gate — the
-    # r13 form held two eager edge-sized checkpoints for the whole
-    # query (r13 ADVICE residency note). InMemoryRelation preserves
-    # the window's hash(s) outputPartitioning just like LogicalRDD.
-    e_w = e.withColumn(
-        "out_deg", F.count(F.lit(1)).over(Window.partitionBy("s"))
-    ).persist()
-    deg = e_w.groupBy("s").agg(F.first("out_deg").alias("out_deg"))
-    if symmetric:
-        nodes = deg.select(F.col("s").alias("node")).localCheckpoint(eager=True)
-        dang_nodes, n_dang = None, 0
-    else:
-        nodes = (
-            e_w.select(F.col("s").alias("node"))
-            .union(e_w.select(F.col("d").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        dang_nodes = (
-            nodes.join(deg, nodes["node"] == deg["s"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        n_dang = dang_nodes.count()
-    n = nodes.count()
-    bcast_ranks = n <= broadcast_ranks_max
-    if bcast_ranks:
-        # Below the gate the rank state joins BROADCAST, so the edge
-        # relation never shuffles for the join — relay it out
-        # hash-partitioned by the contribution GROUP key instead (d,
-        # aliased to node below): the per-iteration groupBy then needs
-        # no exchange at all (the HITS two-layout discipline; the
-        # broadcast join and the alias-aware projection both preserve
-        # the pinned partitioning). One extra edge-sized setup shuffle
-        # buys max_iter exchange-free aggregates (isolated A/B at
-        # sf0.1: 7.4 -> 5.9 s). Above the gate the state must shuffle
-        # to the edge layout, so hash(s) — the window's own output
-        # layout — remains the right pin.
-        n_shuffle = int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        )
-        e_w2 = e_w.repartition(n_shuffle, "d").localCheckpoint(eager=True)
-        # deg/nodes/dang_nodes are materialized checkpoints by now —
-        # release the s-layout copy so only ONE edge-sized relation
-        # stays resident through the loop (r13 ADVICE).
-        e_w.unpersist()
-        e_w = e_w2
+    e_w, nodes, dang_nodes, n_dang, _, bcast = _weighted_edges(
+        edges, src, dst, pre_deduped, symmetric
+    )
     seed_mass = 1.0 - damping  # same float order as the oracle's 1.0-0.85
-    sparse = spark.createDataFrame(
+    sparse = edges.sparkSession.createDataFrame(
         [(int(restart_node), 1.0)], "node bigint, rank double"
     )
     # rank the seed holds when absent from the sparse state (no inflow)
@@ -599,7 +553,7 @@ def personalized_pagerank(
             )
         else:
             dangling = 0.0
-        rk = F.broadcast(sparse) if bcast_ranks else sparse
+        rk = _bcast(sparse, bcast)
         src_rank = F.coalesce(
             F.col("rank"),
             F.when(F.col("s") == restart_node, F.lit(seed_fallback)).otherwise(
@@ -663,8 +617,7 @@ def label_propagation(
     Scale shape: one shuffle per round (the neighbor-label count on
     node), counts bounded by edge count; the per-node argmax is a
     window over each node's neighbor-label histogram — partitioned by
-    node, never global. localCheckpoint truncates per-round lineage
-    exactly as pagerank does; state is one (node, label) row per node.
+    node, never global; state is one (node, label) row per node.
 
     A broadcast-label two-regime variant (src-pinned arcs + broadcast
     state, the k_core/connected_components r14 layout) was A/B'd and
@@ -679,14 +632,7 @@ def label_propagation(
     ).unionByName(
         edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     )
-    # Partition the symmetric arc relation by the per-round join key
-    # ONCE and pin it (LogicalRDD preserves outputPartitioning — the
-    # deterministic_walks discipline): each round then shuffles only
-    # the node-sized label state, never the edge relation.
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    sym = sym.repartition(n_shuffle, "dst").localCheckpoint(eager=True)
+    sym = _pin(sym, "dst")
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -707,81 +653,17 @@ def label_propagation(
     return labels
 
 
-def bfs_hops(
-    edges: DataFrame,
-    a: str = "a",
-    b: str = "b",
-    max_hops: int = 6,
-) -> DataFrame:
-    """(node, hops) — minimum hop distance from the graph's minimum
-    node id to every node reachable within ``max_hops``, treating
-    edges as undirected. The fifth graph primitive next to connected
-    components, PageRank, triangle counting, and label propagation.
-
-    The source is the MIN node id (deterministic, scale-factor
-    independent — no literal vertex id baked into the plan); it is
-    computed inside the plan as a one-row aggregate, never collected.
-
-    Scale shape: textbook distributed frontier BFS — one edge-keyed
-    shuffle join per level, never more than ``max_hops`` rounds. The
-    frontier carries only NEW nodes (left-anti against settled
-    distances), so each vertex is expanded exactly once and total work
-    is O(E) across all rounds, not O(E x rounds); per-round eager
-    localCheckpoint truncates the growing lineage exactly as pagerank
-    does. The settled-distance relation is node-sized. The undirected
-    arc relation is partitioned by the frontier-join key ONCE (the
-    deterministic_walks discipline) so each level shuffles only the
-    frontier."""
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    e = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    und = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition(n_shuffle, "s")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
-        und.agg(F.min("s").alias("node"))
-        .withColumn("hops", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist.select("node")
-    n_front = 1
-    for k in range(1, max_hops + 1):
-        # Broadcast the frontier while it stays small (r14): the
-        # emptiness check's action doubles as the exact per-level gate.
-        f = F.broadcast(frontier) if n_front <= _STATE_BCAST_MAX else frontier
-        nxt = (
-            f.join(und, frontier.node == und.s)
-            .select(F.col("d").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(k).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        n_front = nxt.count()
-        if n_front == 0:
-            break
-        dist = dist.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    return dist
-
-
 def k_core(
     edges: DataFrame,
     k: int,
     a: str = "a",
     b: str = "b",
     max_rounds: int = 12,
-    broadcast_nodes_max: int | None = None,
 ) -> DataFrame:
     """(node, core_degree) — the k-core: the maximal subgraph where
     every node keeps >= k neighbors INSIDE the subgraph, by the
     classic peel (drop under-degree nodes, recompute, repeat to
-    fixpoint). The sixth graph primitive (CC, PageRank, triangles,
-    LPA, BFS, k-core); cores are the density skeleton community and
+    fixpoint). Cores are the density skeleton community and
     robustness analyses start from.
 
     Convergence is detected by node-count equality (the alive set
@@ -790,49 +672,28 @@ def k_core(
     with an unrolled cross-engine oracle must know the fixpoint fits
     the oracle's round budget rather than silently diverge from it.
 
-    Scale shape: one degree aggregate (edge-keyed shuffle bounded by
-    surviving edges) per round; the alive relation is node-sized and
-    eagerly checkpointed so round plans stay flat. Peel rounds on
-    real graphs are few (each round removes a whole degree layer);
-    the worst case is path-graph O(n), which no co-occurrence graph
-    resembles."""
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    e = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    # Two-regime layout (r14 — the CC/LPA discipline). Below the
-    # ``broadcast_nodes_max`` gate the alive set ships BROADCAST into
-    # both degree joins and the arcs are pinned by ``s``: the joins
-    # are narrow, hash(s) survives them and satisfies the groupBy(s)
-    # — ZERO exchanges per peel round. Above the gate (node-sized
-    # state must not hit the driver) the arcs are re-pinned by ``d``
-    # with the joins ordered d-first then s: the only edge-sized
-    # shuffle left is the s-join, whose partitioning the groupBy then
-    # reuses (the r13 shape).
-    und = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition(n_shuffle, "s")
-        .localCheckpoint(eager=True)
-    )
+    Scale shape: one degree aggregate per round over the alive set,
+    broadcast into both degree joins below the gate, where the
+    s-pinned arcs make the round exchange-free. Above it the arcs are
+    re-pinned by ``d`` and the joins run d-first, so the only
+    edge-sized shuffle left is the s-join, whose partitioning the
+    groupBy reuses. Peel rounds on real graphs are few (each round
+    removes a whole degree layer); the worst case is path-graph O(n),
+    which no co-occurrence graph resembles."""
+    und = _undirected(edges, a, b)
     # Exchange-free on the s-partitioned checkpoint.
     alive = und.select(F.col("s").alias("node")).distinct().localCheckpoint(
         eager=True
     )
     n = alive.count()
-    if broadcast_nodes_max is None:
-        broadcast_nodes_max = _STATE_BCAST_MAX
-    bcast = n <= broadcast_nodes_max
+    bcast = n <= _STATE_BCAST_MAX
     if not bcast:
-        und = und.repartition(n_shuffle, "d").localCheckpoint(eager=True)
-
-    def _hint(state: DataFrame) -> DataFrame:
-        return F.broadcast(state) if bcast else state
+        und = _repin(und, "d")
 
     def degrees(alive: DataFrame) -> DataFrame:
         return (
-            und.join(_hint(alive.select(F.col("node").alias("d"))), "d")
-            .join(_hint(alive.withColumnRenamed("node", "s")), "s")
+            und.join(_bcast(alive.select(F.col("node").alias("d")), bcast), "d")
+            .join(_bcast(alive.withColumnRenamed("node", "s"), bcast), "s")
             .groupBy(F.col("s").alias("node"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
         )
@@ -876,28 +737,17 @@ def sssp_bounded(
     with the settled state; classic delta relaxation, same fixpoint as
     relaxing every node (an unimproved node's contributions were
     already applied the round it last improved). State is
-    node-bounded, checkpointed per round (a per-round action on a lazy
-    chain would re-execute the whole history each pass). All values
-    are exact int64: no float ever enters the min."""
-    # Two-regime layout (r14 — the CC/LPA/k-core discipline). Below
-    # the gate the frontier ships BROADCAST and the edges are pinned
-    # by the relaxation TARGET key (dst): the join is narrow, hash(dst)
-    # survives it and satisfies the groupBy(node) min-merge — no
-    # edge-expansion-sized exchange per round. The gate is the EDGE
-    # count (edges >= nodes >= any frontier, so it conservatively
-    # bounds the broadcast; one cheap count on the checkpoint). Above
-    # the gate the r13 shape is kept: pinned by src, each round's
-    # frontier join leaves the edge relation in place and shuffles
-    # only the frontier.
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    node-bounded. All values are exact int64: no float ever enters the
+    min."""
+    # Below the gate the frontier ships broadcast and the edges are
+    # pinned by the relaxation TARGET key (dst), so hash(dst) survives
+    # the narrow join into the groupBy(node) min-merge. The gate is the
+    # EDGE count: edges >= nodes >= any frontier, so it bounds the
+    # broadcast with one count. Above it the edges are pinned by src,
+    # and each round shuffles only the frontier.
     e0 = edges.select(src, dst, weight).persist()
     bcast = e0.count() <= _STATE_BCAST_MAX
-    edges = (
-        e0.repartition(n_shuffle, dst if bcast else src)
-        .localCheckpoint(eager=True)
-    )
+    edges = _pin(e0, dst if bcast else src)
     e0.unpersist()
     if source_node is None:
         source_node = edges.agg(F.min(src)).collect()[0][0]
@@ -909,9 +759,8 @@ def sssp_bounded(
     )
     frontier = dist
     for _ in range(rounds):
-        f = F.broadcast(frontier) if bcast else frontier
         cand = (
-            f.join(edges, F.col("node") == F.col(src))
+            _bcast(frontier, bcast).join(edges, F.col("node") == F.col(src))
             .select(
                 F.col(dst).alias("node"),
                 (F.col("dist") + F.col(weight)).alias("cdist"),
@@ -951,7 +800,8 @@ def multi_source_bfs(
     max_hops: int = 6,
 ) -> DataFrame:
     """(src, node, hops) — minimum hop distances from the ``n_sources``
-    smallest node ids to every node within ``max_hops``, undirected.
+    smallest node ids to every node within ``max_hops``, undirected;
+    ``n_sources=1`` is the single-source BFS from the minimum node id.
     The k-source sampling primitive behind estimated centralities
     (harmonic/closeness a la Eppstein & Wang 2004 — public method):
     one BFS sweep carries ALL sources as a composite (src, node)
@@ -961,23 +811,11 @@ def multi_source_bfs(
     the settled relation).
 
     Sources are the k smallest node ids — deterministic and scale-
-    factor independent like bfs_hops' min-id rule; the seed is a
-    k-row sorted limit (TakeOrdered), never a collect."""
-    e = edges.select(F.col(a).alias("s"), F.col(b).alias("d"))
-    # Pinned by the frontier-join key ONCE (r14 — this sweep predated
-    # the deterministic_walks discipline: the un-pinned arc relation
-    # re-exchanged EVERY level); the per-level frontier additionally
-    # ships broadcast while it stays small (its exact row count is the
-    # emptiness check's own action, so the per-level gate is free).
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    und = (
-        e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .repartition(n_shuffle, "s")
-        .localCheckpoint(eager=True)
-    )
+    factor independent, with no literal vertex id baked into the plan;
+    the seed is a k-row sorted limit (TakeOrdered), never a collect.
+    The frontier is gated per level on its exact row count, which the
+    emptiness check already computes."""
+    und = _undirected(edges, a, b)
     dist = (
         und.select(F.col("s").alias("node"))
         .distinct()
@@ -993,9 +831,9 @@ def multi_source_bfs(
     frontier = dist.select("src", "node")
     n_front = n_sources
     for k in range(1, max_hops + 1):
-        f = F.broadcast(frontier) if n_front <= _STATE_BCAST_MAX else frontier
         nxt = (
-            f.join(und, frontier.node == und.s)
+            _bcast(frontier, n_front <= _STATE_BCAST_MAX)
+            .join(und, frontier.node == und.s)
             .select("src", F.col("d").alias("node"))
             .distinct()
             .join(dist.select("src", "node"), ["src", "node"], "left_anti")
@@ -1076,27 +914,27 @@ def boruvka_msf(
         .select("node", F.col("node").alias("c"))
         .localCheckpoint(eager=True)
     )
-    # Below the node gate the component map ships BROADCAST into the
-    # per-round labeling joins (r14 — the CC/LPA/k-core discipline):
-    # the edge relation never re-shuffles (the r13 shape exchanged it
-    # by u AND by v every round, since comp changes each round). Above
-    # the gate the shuffle joins stay — node-sized state must not hit
-    # the driver.
+    # Below the gate the component map ships broadcast into the
+    # labeling joins, so the edge relation never re-shuffles (the
+    # shuffle joins exchange it by u AND by v every round, since comp
+    # changes each round).
     bcast = comp.count() <= _STATE_BCAST_MAX
 
-    def _hint(state: DataFrame) -> DataFrame:
-        return F.broadcast(state) if bcast else state
+    def cross(comp: DataFrame) -> DataFrame:
+        """Edges labeled with both endpoint components, cross-component
+        edges only."""
+        return (
+            e.join(_bcast(comp.select(F.col("node").alias("u"),
+                                      F.col("c").alias("cu")), bcast), "u")
+            .join(_bcast(comp.select(F.col("node").alias("v"),
+                                     F.col("c").alias("cv")), bcast), "v")
+            .filter(F.col("cu") != F.col("cv"))
+        )
 
     chosen_rounds = []
     for _ in range(max_rounds):
-        lab = (
-            e.join(_hint(comp.select(F.col("node").alias("u"),
-                                     F.col("c").alias("cu"))), "u")
-            .join(_hint(comp.select(F.col("node").alias("v"),
-                                    F.col("c").alias("cv"))), "v")
-            .filter(F.col("cu") != F.col("cv"))
-            .localCheckpoint(eager=True)  # feeds both argmin orientations
-        )
+        # feeds both argmin orientations
+        lab = cross(comp).localCheckpoint(eager=True)
         n_cross = lab.count()
         if n_cross == 0:
             break
@@ -1136,20 +974,12 @@ def boruvka_msf(
             "dst",
         ).select(F.col("node").alias("c"), F.col("component").alias("nc"))
         comp = (
-            comp.join(_hint(mapping), "c", "left")
+            comp.join(_bcast(mapping, bcast), "c", "left")
             .select("node", F.coalesce("nc", F.col("c")).alias("c"))
             .localCheckpoint(eager=True)
         )
     else:  # no break: round budget exhausted — probe for completeness
-        remaining = (
-            e.join(_hint(comp.select(F.col("node").alias("u"),
-                                     F.col("c").alias("cu"))), "u")
-            .join(_hint(comp.select(F.col("node").alias("v"),
-                                    F.col("c").alias("cv"))), "v")
-            .filter(F.col("cu") != F.col("cv"))
-            .limit(1)
-            .count()
-        )
+        remaining = cross(comp).limit(1).count()
         if remaining:
             # Components only guarantee halving, so a component larger
             # than 2^max_rounds nodes can outlive the budget; returning
@@ -1209,9 +1039,8 @@ def spectral_bisection(
     on planted two-community graphs in tests/test_graph.py.
 
     100 TB shape: one edge-keyed shuffle join + one map-side-combined
-    3-scalar aggregate per round (the pagerank discipline), node
-    relation localCheckpoint'ed per round so plans stay flat; the
-    driver sees 3 scalars per round, never rows.
+    3-scalar aggregate per round; the driver sees 3 scalars per round,
+    never rows.
 
     Input edges must be canonical (u < v, one row per edge).
     """
@@ -1309,20 +1138,9 @@ def deterministic_walks(
     ``arcs`` must be the symmetric arc relation (both directions
     present; every node has out-degree >= 1).
 
-    The arc relation is partitioned by the join key ONCE and pinned
-    with a checkpoint (LogicalRDD preserves outputPartitioning), so
-    every step's join shuffles only the node-sized walker state — at
-    scale the difference between 1 and ``steps`` edge shuffles (in
-    production: a bucketed edge table). Measured at sf0.1 this cut the
-    deepwalk query's total shuffle write 8x (158.8 -> 19.5 MB)."""
-    n_shuffle = int(
-        arcs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    a = (
-        arcs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .repartition(n_shuffle, "u")
-        .localCheckpoint(eager=True)
-    )
+    Pinning the arcs by the join key measured an 8x cut in the deepwalk
+    query's total shuffle write at sf0.1 (158.8 -> 19.5 MB)."""
+    a = _pin(arcs.select(F.col(src).alias("u"), F.col(dst).alias("v")), "u")
     cur = a.select(F.col("u").alias("walk_id")).distinct().select(
         "walk_id", F.col("walk_id").alias("node")
     ).localCheckpoint(eager=True)

@@ -2273,11 +2273,12 @@ def bfs_hop_distance_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     separation); the oracle replays it as a depth-bounded recursive
     CTE with min-per-node over the deduplicated (node, depth) walk.
 
-    100 TB shape: operators/graph.bfs_hops — one edge-keyed shuffle
-    per level, frontier carries only unsettled nodes (left-anti), so
-    total join work is O(E) over the whole traversal; the recursion
-    never enumerates paths (the oracle's UNION dedups (node, depth)
-    pairs, the Spark side settles each node once)."""
+    100 TB shape: operators/graph.multi_source_bfs with one source —
+    one edge-keyed shuffle per level, frontier carries only unsettled
+    nodes (left-anti), so total join work is O(E) over the whole
+    traversal; the recursion never enumerates paths (the oracle's UNION
+    dedups (node, depth) pairs, the Spark side settles each node
+    once)."""
     sets = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -2302,9 +2303,11 @@ def bfs_hop_distance_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n") >= 2)
         .select("a", "b")
     )
-    from etl_pipeline_orchestration_spark.operators.graph import bfs_hops
+    from etl_pipeline_orchestration_spark.operators.graph import (
+        multi_source_bfs,
+    )
 
-    dist = bfs_hops(edges, max_hops=_BFS_MAX_HOPS)
+    dist = multi_source_bfs(edges, n_sources=1, max_hops=_BFS_MAX_HOPS).drop("src")
     return dist.select(
         F.col("node").cast("bigint").alias("part"),
         F.col("hops").cast("bigint").alias("hops"),

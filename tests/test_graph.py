@@ -1,11 +1,15 @@
-"""Connected components: both execution paths must produce identical,
-correct clusters — the driver union-find (small graphs) and the
-distributed pointer-jumping loop (forced via driver_threshold=0)."""
+"""Graph operators against hand-built expectations and reference
+replays; tests taking the ``bcast_gate`` fixture run on both sides of
+the state broadcast gate. Connected components: both execution paths
+must produce identical, correct clusters — the driver union-find (small
+graphs) and the distributed pointer-jumping loop (forced via
+driver_threshold=0)."""
 
 from __future__ import annotations
 
 import pytest
 
+from etl_pipeline_orchestration_spark.operators import graph
 from etl_pipeline_orchestration_spark.operators.graph import connected_components
 
 # chain 1-2-3-4-5 (one component, diameter 4 — forces >1 jump round),
@@ -19,8 +23,17 @@ WANT = {
 }
 
 
-@pytest.mark.parametrize("threshold", [2_000_000, 0], ids=["driver", "distributed"])
-def test_connected_components_paths_agree(spark, threshold):
+@pytest.mark.parametrize(
+    "threshold, bcast_gate",
+    [
+        (2_000_000, graph._STATE_BCAST_MAX),
+        (0, graph._STATE_BCAST_MAX),
+        (0, 0),
+    ],
+    ids=["driver", "distributed", "distributed-gate0"],
+    indirect=["bcast_gate"],
+)
+def test_connected_components_paths_agree(spark, threshold, bcast_gate):
     edges = spark.createDataFrame(EDGES, ["src", "dst"])
     got = {
         r["node"]: r["component"]
@@ -134,7 +147,7 @@ def test_degree_orientation_reduces_wedges(spark):
     assert by_degree < raw, (by_degree, raw)
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+def test_pagerank_matches_numpy_power_iteration(spark, bcast_gate):
     """PageRank on a fixed directed graph (with a dangling node) must
     match a dense numpy power iteration within tolerance."""
     import numpy as np
@@ -234,10 +247,18 @@ def test_adaptive_orientation_paths_agree(spark):
 
 
 def test_bfs_hops_levels_and_source(spark):
-    """BFS laws on a hand-built graph: source (min id) at 0, every
-    settled node's hops = 1 + min over settled neighbors, unreachable
-    and beyond-max-hops nodes absent, edge endpoints differ by <= 1."""
-    from etl_pipeline_orchestration_spark.operators.graph import bfs_hops
+    """Single-source BFS laws on a hand-built graph: source (min id) at
+    0, every settled node's hops = 1 + min over settled neighbors,
+    unreachable and beyond-max-hops nodes absent, edge endpoints differ
+    by <= 1."""
+    from etl_pipeline_orchestration_spark.operators.graph import (
+        multi_source_bfs,
+    )
+
+    def bfs_hops(edges, max_hops):
+        dist = multi_source_bfs(edges, n_sources=1, max_hops=max_hops)
+        assert {r.src for r in dist.select("src").distinct().collect()} == {1}
+        return dist.drop("src")
 
     # chain 1-2-3-4-5, branch 2-10, island 100-101
     raw = [(1, 2), (2, 3), (3, 4), (4, 5), (2, 10), (100, 101)]
@@ -252,7 +273,7 @@ def test_bfs_hops_levels_and_source(spark):
     assert full == {1: 0, 2: 1, 3: 2, 10: 2, 4: 3, 5: 4}  # early-exit path
 
 
-def test_k_core_peel_semantics(spark):
+def test_k_core_peel_semantics(spark, bcast_gate):
     """Hand graph: a 4-clique (3-core) with a pendant chain hanging off
     it — the chain must peel away layer by layer, the clique survives
     with within-core degree 3; k=5 empties the graph; the round-budget
@@ -276,7 +297,7 @@ def test_k_core_peel_semantics(spark):
         k_core(path, k=2, max_rounds=2)
 
 
-def test_personalized_pagerank_matches_numpy(spark):
+def test_personalized_pagerank_matches_numpy(spark, bcast_gate):
     """PPR on a fixed directed graph (with a dangling node) must match
     a dense numpy power iteration with teleport-to-seed within
     tolerance, and stay a probability distribution."""
@@ -355,7 +376,7 @@ def test_ppr_query_rounding_margins(spark):
     assert min_margin > 1e-3, f"half-boundary margin too thin: {min_margin}"
 
 
-def test_multi_source_bfs_matches_python_replay(spark):
+def test_multi_source_bfs_matches_python_replay(spark, bcast_gate):
     """Composite-frontier BFS == per-source python BFS on a planted
     graph (path + branch + disconnected pair), and the harmonic sum is
     the exact integer 1e6-div replay."""
@@ -510,3 +531,81 @@ def test_deterministic_walks_match_python_replay(spark):
             cur = min(nbrs[cur], key=lambda v: (coin(start, t, v), v))
             assert got[(start, t)] == cur, (start, t)
     assert len(got) == len(nbrs) * (steps + 1)
+
+
+# Every public graph operator on a small graph (EDGES re-oriented a < b).
+_OPERATORS = {
+    "connected_components": lambda e: graph.connected_components(
+        e, "a", "b", driver_threshold=0
+    ),
+    "degree_oriented_edges": graph.degree_oriented_edges,
+    "oriented_edges_adaptive": lambda e: graph.oriented_edges_adaptive(e)[0],
+    "pagerank": lambda e: graph.pagerank(e, "a", "b", max_iter=3),
+    "personalized_pagerank": lambda e: graph.personalized_pagerank(
+        e, 1, "a", "b", max_iter=3
+    ),
+    "label_propagation": lambda e: graph.label_propagation(e, rounds=2),
+    "k_core": lambda e: graph.k_core(e, k=2),
+    "sssp_bounded": lambda e: graph.sssp_bounded(
+        e.withColumn("w", e["a"] % 3 + 1), rounds=4, src="a", dst="b"
+    ),
+    "multi_source_bfs": lambda e: graph.multi_source_bfs(e, n_sources=2),
+    "boruvka_msf": lambda e: graph.boruvka_msf(
+        e.withColumn("w", e["b"] % 3 + 1), "a", "b", driver_threshold=0
+    ),
+    "spectral_bisection": lambda e: graph.spectral_bisection(e, "a", "b"),
+    "deterministic_walks": lambda e: graph.deterministic_walks(
+        e.union(e.select("b", "a")), steps=2, src="a", dst="b"
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPERATORS))
+def test_graph_operator_leaves_cache_empty(spark, bcast_gate, op):
+    """No graph operator leaves a persisted relation in the session's
+    cache manager once it returns, on either side of the gate, and its
+    result still computes after the staging copies are released."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    edges = spark.createDataFrame(
+        [(min(s, d), max(s, d)) for s, d in EDGES], "a long, b long"
+    )
+    out = _OPERATORS[op](edges)
+    assert cache.isEmpty(), op
+    assert out.collect()
+
+
+# Measured before the graph loops shared their pin/gate/release helpers;
+# the same count at local[4] with 4 shuffle partitions and in the
+# benchmark's traced run (plans.build_jobs.graph_pagerank_part_supplier).
+PAGERANK_BUILD_JOBS = 24
+
+
+def test_pagerank_query_build_jobs(spark):
+    """The pagerank call graph_pagerank_part_supplier makes (symmetric,
+    pre-deduped, tol=0, below the gate) builds its ranks with a fixed
+    number of Spark jobs: the setup checkpoints, and none per
+    iteration. Changing that count changes the benchmarked build."""
+    from pyspark.sql import functions as F
+
+    from etl_pipeline_orchestration_spark.operators.graph import pagerank
+    from etl_pipeline_orchestration_spark.sources.tables import load_table
+
+    off = 1_000_000_000
+    li = load_table(spark, "/root/testdata/sf0.001", "lineitem").select(
+        "l_partkey", (F.col("l_suppkey") + off).alias("supp_node")
+    )
+    fwd = li.select(
+        F.col("l_partkey").alias("src"), F.col("supp_node").alias("dst")
+    ).distinct()
+    edges = fwd.union(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    sc = spark.sparkContext
+    group = "test_pagerank_query_build_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        pagerank(edges, max_iter=10, tol=0.0, pre_deduped=True, symmetric=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == PAGERANK_BUILD_JOBS

@@ -79,10 +79,10 @@ def test_msf_matches_kruskal_reference(edges):
     assert len(got) < n_nodes
 
 
-def test_distributed_path_equals_hybrid(edges):
+def test_distributed_path_equals_hybrid(edges, bcast_gate):
     """driver_threshold=0 forces every round through the distributed
     argmin + pointer-jump contraction — the at-scale path must emit
-    the identical forest."""
+    the identical forest, on both sides of the state broadcast gate."""
     hybrid = {
         tuple(map(int, (r["u"], r["v"], r["w"])))
         for r in boruvka_msf(edges).collect()
@@ -91,7 +91,7 @@ def test_distributed_path_equals_hybrid(edges):
         tuple(map(int, (r["u"], r["v"], r["w"])))
         for r in boruvka_msf(edges, driver_threshold=0).collect()
     }
-    assert dist == hybrid
+    assert dist == hybrid == _kruskal_ref(edges.collect())
 
 
 def test_registered_query_runs(spark):
